@@ -88,7 +88,7 @@ def main() -> None:
     # per-query stage-cache activity (r15 verdict item 9: warm-artifact
     # per-query numbers must be auditable) — pure logging into
     # bench_detail.json, zero effect on timings or the stdout contract
-    from newyork_taxi_etl_spark.streaming.windows import _STAGE_CACHE_EVENTS
+    from newyork_taxi_etl_spark.stagecache import EVENTS as _STAGE_CACHE_EVENTS
 
     cache_log: dict[str, dict[str, list[str]]] = {}
 

@@ -90,7 +90,7 @@ def local_rows_df(spark, rows, schema):
             rows, columns=[f.name for f in fields], dtype=object
         )
         return spark.createDataFrame(pdf, schema=schema)
-    if not rows or any(None in r for r in rows):
+    if not rows or any(v is None for r in rows for v in r):
         # bare-name inference: empty input raises on the pandas path and
         # an int column containing None coerces to float64 (DoubleType)
         # where the RDD path infers bigint — route both to the legacy

@@ -85,3 +85,29 @@ def logistic_gd(
         if trajectory:
             traj.append(list(w))
     return traj if trajectory else w
+
+
+def quality_features(label: bool = True) -> list[Column]:
+    """The learned quality filter's per-document features over ``text``
+    and ``n_chars`` (quality_logreg_filter and every consumer of its
+    weights): ``x1`` token count and ``x2`` type-token ratio, both
+    centered at the keep/drop rule's boundary (tokens >= 30, ttr >= 0.2),
+    ``x3`` the 100-400-char size window, and with ``label`` the rule's own
+    decision as the teacher label ``y``.  Select them beside any
+    passthrough columns: ``docs.select("doc_id", *quality_features())``."""
+    toks = F.split(F.col("text"), " ")
+    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
+    cols = [
+        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
+        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
+        F.when(F.col("n_chars").between(100, 400), 1.0)
+        .otherwise(0.0)
+        .alias("x3"),
+    ]
+    if label:
+        cols.append(
+            F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
+            .otherwise(0.0)
+            .alias("y")
+        )
+    return cols

@@ -988,46 +988,33 @@ _LOGREG_P = (
 )
 
 
-def _logreg_weights_cached(spark, docs, sf_dir: str) -> list[float]:
+def _logreg_weights_cached(spark, docs, docs_key: str) -> list[float]:
     """The 16-step full-corpus logistic training (quality_logreg_filter's
-    scorer) persisted ONCE per corpus — eight registered queries train
-    the IDENTICAL weights (filter, distillation audit, learned pipeline,
-    AUC, ECE, curriculum stages, PSI, ccnet agreement) and the streaming
-    quality/PSI folds already stage-cache the same build under the same
-    key (streaming/windows.run_streaming_quality_ingest), so batch and
-    stream now share one artifact.  Weights are raw doubles from the
+    scorer) persisted ONCE per corpus under ``{docs_key}:logreg_weights``
+    (``docs_key`` is ``documents_qg:{sf_dir}``) — the one build behind
+    eight registered batch queries (filter, distillation audit, learned
+    pipeline, AUC, ECE, curriculum stages, PSI, ccnet agreement) and the
+    streaming quality/PSI drains.  Weights are raw doubles from the
     deterministic decimal-gradient loop; parquet round-trips them
     bit-exactly, so hit and miss paths are value-identical."""
-    import os
+    from newyork_taxi_etl_spark.localrel import local_rows_df
+    from newyork_taxi_etl_spark.operators.logreg import (
+        logistic_gd,
+        quality_features,
+    )
+    from newyork_taxi_etl_spark.stagecache import cached_df
 
-    from newyork_taxi_etl_spark.operators.logreg import logistic_gd
-    from newyork_taxi_etl_spark.streaming.windows import _stage_cached
-
-    def build(target: str) -> None:
-        toks = F.split(F.col("text"), " ")
-        ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-        feats = docs.select(
-            ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-            ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-            F.when(F.col("n_chars").between(100, 400), 1.0)
-            .otherwise(0.0)
-            .alias("x3"),
-            F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-            .otherwise(0.0)
-            .alias("y"),
-        ).localCheckpoint()
+    def build():
+        feats = docs.select(*quality_features()).localCheckpoint()
         w = logistic_gd(feats, ["x1", "x2", "x3"], "y", steps=16, lr=4.0)
-        from newyork_taxi_etl_spark.localrel import local_rows_df
-
-        local_rows_df(
+        return local_rows_df(
             spark, [(j, float(wj)) for j, wj in enumerate(w)],
             "j int, w double",
-        ).coalesce(1).write.mode("overwrite").parquet(target)
+        )
 
-    sdir = _stage_cached(
-        None, f"documents_qg:{sf_dir}:logreg_weights", build
-    )
-    rows = spark.read.parquet(sdir).collect()
+    rows = cached_df(
+        spark, f"{docs_key}:logreg_weights", build, n_files=1
+    ).collect()
     return [r["w"] for r in sorted(rows, key=lambda r: r["j"])]
 
 
@@ -1080,25 +1067,14 @@ def _logreg_sql(steps: int = 16, lr: float = 4.0) -> str:
 )
 def quality_logreg_filter(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
         logistic_prob,
+        quality_features,
     )
 
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    feats = docs.select(
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
-    ).localCheckpoint()
+    feats = docs.select(*quality_features()).localCheckpoint()
 
-    w = _logreg_weights_cached(spark, docs, sf_dir)
+    w = _logreg_weights_cached(spark, docs, f"documents_qg:{sf_dir}")
     keep = logistic_prob(w, ["x1", "x2", "x3"]) >= F.lit(0.5)
     agree = keep == (F.col("y") == F.lit(1.0))
     n = F.count(F.lit(1))
@@ -1186,26 +1162,14 @@ def _distill_audit_sql() -> str:
 )
 def quality_distillation_audit(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
         logistic_prob,
+        quality_features,
     )
     from newyork_taxi_etl_spark.queries.text import _QR_RULES, _qr_stats
 
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    feats = docs.select(
-        "doc_id",
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
-    ).localCheckpoint()
-    w = _logreg_weights_cached(spark, docs, sf_dir)
+    feats = docs.select("doc_id", *quality_features()).localCheckpoint()
+    w = _logreg_weights_cached(spark, docs, f"documents_qg:{sf_dir}")
     scored = feats.select(
         "doc_id",
         (logistic_prob(w, ["x1", "x2", "x3"]) >= F.lit(0.5))
@@ -1330,29 +1294,21 @@ _LEARNED_PIPE_SQL = f"""WITH {_logreg_train_ctes(16, 4.0)},
 def corpus_pipeline_learned(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.dedup import dedup_exact
     from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
         logistic_prob,
+        quality_features,
     )
 
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
     toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    x1 = ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1")
-    x2 = ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2")
-    x3 = (
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3")
-    )
-    # training feats live inside the cached build; x1/x2/x3 still score
-    # the corpus below
-    w = _logreg_weights_cached(spark, docs, sf_dir)
+    w = _logreg_weights_cached(spark, docs, f"documents_qg:{sf_dir}")
 
     corpus = docs.filter(F.col("doc_id") % 50 != 0)
     bench = docs.filter(F.col("doc_id") % 50 == 0)
     # logistic_prob references x1..x3 as columns: attach them first
     scored = (
-        corpus.select("doc_id", "text", "lang", x1, x2, x3)
+        corpus.select(
+            "doc_id", "text", "lang", *quality_features(label=False)
+        )
         .withColumn("p", logistic_prob(w, ["x1", "x2", "x3"]))
         .localCheckpoint(eager=True)  # gate + per-lang drop ledger
     )
@@ -1608,24 +1564,13 @@ def quality_auc_rank(spark, sf_dir):
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
         logistic_prob,
+        quality_features,
     )
 
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    feats = docs.select(
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
-    ).localCheckpoint()
-    w = _logreg_weights_cached(spark, docs, sf_dir)
+    feats = docs.select(*quality_features()).localCheckpoint()
+    w = _logreg_weights_cached(spark, docs, f"documents_qg:{sf_dir}")
 
     by_p = (
         feats.select(
@@ -1712,24 +1657,13 @@ def quality_calibration_ece(spark, sf_dir):
     from pyspark.sql import Window
 
     from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
         logistic_prob,
+        quality_features,
     )
 
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    feats = docs.select(
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
-    ).localCheckpoint()
-    w = _logreg_weights_cached(spark, docs, sf_dir)
+    feats = docs.select(*quality_features()).localCheckpoint()
+    w = _logreg_weights_cached(spark, docs, f"documents_qg:{sf_dir}")
     p = logistic_prob(w, ["x1", "x2", "x3"])
 
     binned = feats.select(
@@ -1837,27 +1771,18 @@ _CURR_SQL = f"""WITH {_logreg_train_ctes(16, 4.0)},
 )
 def curriculum_quality_stages(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
         logistic_prob,
+        quality_features,
     )
     from newyork_taxi_etl_spark.operators.profile import ordered_positions
 
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     feats = docs.select(
         "doc_id",
-        F.size(toks).alias("n_tokens"),
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
+        F.size(F.split(F.col("text"), " ")).alias("n_tokens"),
+        *quality_features(),
     ).localCheckpoint()
-    w = _logreg_weights_cached(spark, docs, sf_dir)
+    w = _logreg_weights_cached(spark, docs, f"documents_qg:{sf_dir}")
 
     scored = feats.select(
         "doc_id",
@@ -1967,21 +1892,12 @@ def logreg_learning_curve(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.logreg import (
         logistic_gd,
         logistic_prob,
+        quality_features,
     )
 
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     allfeats = docs.select(
-        (F.col("doc_id") % 5 == 0).alias("is_val"),
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
+        (F.col("doc_id") % 5 == 0).alias("is_val"), *quality_features()
     ).localCheckpoint()
     traj = logistic_gd(
         allfeats.filter(~F.col("is_val")),
@@ -2094,21 +2010,12 @@ def logreg_kfold_cv(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.logreg import (
         logistic_gd,
         logistic_prob,
+        quality_features,
     )
 
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
     af = docs.select(
-        (F.col("doc_id") % 3).alias("fold"),
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
+        (F.col("doc_id") % 3).alias("fold"), *quality_features()
     ).localCheckpoint()
     # the three folds' trainings are independent 8-step GD loops, each
     # step one tiny aggregate-collect job; running them from a thread
@@ -2440,18 +2347,12 @@ _PSI_DOMAIN_SQL = f"""WITH {_logreg_train_ctes(16, 4.0)},
 def _scored_bins(docs, w):
     """Score docs under weight vector ``w`` and bucket into 10 fixed
     score-decile bins (shared by the batch query and the ingest fold)."""
-    from newyork_taxi_etl_spark.operators.logreg import logistic_prob
-
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    feats = docs.select(
-        "source",
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
+    from newyork_taxi_etl_spark.operators.logreg import (
+        logistic_prob,
+        quality_features,
     )
+
+    feats = docs.select("source", *quality_features(label=False))
     p = logistic_prob(w, ["x1", "x2", "x3"])
     return feats.select(
         "source",
@@ -2479,7 +2380,7 @@ def quality_psi_by_domain(spark, sf_dir):
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
     # the trainer's feature projection lives inside the cached build;
     # _scored_bins below re-derives the scoring features per doc
-    w = _logreg_weights_cached(spark, docs, sf_dir)
+    w = _logreg_weights_cached(spark, docs, f"documents_qg:{sf_dir}")
     counts = (
         _scored_bins(docs, w)
         .groupBy("source", "bin")
@@ -3404,8 +3305,8 @@ _CURR_CCNET_SQL = f"""WITH {_logreg_train_ctes(16, 4.0)},
 )
 def curriculum_ccnet_agreement(spark, sf_dir):
     from newyork_taxi_etl_spark.operators.logreg import (
-        logistic_gd,
         logistic_prob,
+        quality_features,
     )
     from newyork_taxi_etl_spark.operators.profile import ordered_positions
     from newyork_taxi_etl_spark.queries.text import (
@@ -3414,20 +3315,8 @@ def curriculum_ccnet_agreement(spark, sf_dir):
     )
 
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
-    toks = F.split(F.col("text"), " ")
-    ttr = F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
-    feats = docs.select(
-        "doc_id",
-        ((F.size(toks) - F.lit(30.0)) / F.lit(30.0)).alias("x1"),
-        ((ttr - F.lit(0.2)) * F.lit(5.0)).alias("x2"),
-        F.when(F.col("n_chars").between(100, 400), 1.0)
-        .otherwise(0.0)
-        .alias("x3"),
-        F.when((F.size(toks) >= 30) & (ttr >= 0.2), 1.0)
-        .otherwise(0.0)
-        .alias("y"),
-    ).localCheckpoint()
-    w = _logreg_weights_cached(spark, docs, sf_dir)
+    feats = docs.select("doc_id", *quality_features()).localCheckpoint()
+    w = _logreg_weights_cached(spark, docs, f"documents_qg:{sf_dir}")
     scored = feats.select(
         "doc_id", logistic_prob(w, ["x1", "x2", "x3"]).alias("p")
     )
@@ -4088,4 +3977,6 @@ def streaming_doremi_ingest(spark, sf_dir):
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
     work = tempfile.mkdtemp(prefix="nyetl_doremiingest_")
     atexit.register(shutil.rmtree, work, ignore_errors=True)
-    return W.run_streaming_doremi_ingest(spark, docs, work)
+    return W.run_streaming_doremi_ingest(
+        spark, docs, work, cache_key=f"documents_doremi:{sf_dir}"
+    )

@@ -870,13 +870,13 @@ def _diag_runs_cached(spark, sf_dir):
     index + capped pair-diagonal join; the folded run table (one row per
     maximal shared run, all bigints) is tiny and both finishers are
     order-independent."""
-    from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_df
 
     def build():
         docs = spark.read.parquet(table_path(sf_dir, "documents"))
         return D.substring_diag_runs(docs, k=8, max_occ=64)
 
-    return df_stage_cached(
+    return cached_df(
         spark, f"substring_diag_runs_k8c64:{sf_dir}", build, n_files=1
     )
 

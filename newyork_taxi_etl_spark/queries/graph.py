@@ -68,7 +68,7 @@ def _multiband_pairs(spark, sf_dir):
     also replaces the per-query localCheckpoint pins those consumers
     carried."""
     from newyork_taxi_etl_spark.queries.similarity import LSH_BANDS
-    from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_df
 
     def build():
         emb = spark.read.parquet(table_path(sf_dir, "embeddings"))
@@ -78,7 +78,7 @@ def _multiband_pairs(spark, sf_dir):
             emb, threshold=0.4, bands=LSH_BANDS
         )
 
-    return df_stage_cached(
+    return cached_df(
         spark, f"multiband_pairs04:{sf_dir}", build, n_files=1
     )
 
@@ -88,7 +88,7 @@ def _multiband_components(spark, sf_dir):
     graph through the same stage cache — four queries run the identical
     label propagation (loop_partitions=4, hops_per_round=5) over the
     identical edge set; the loop is a pure function of the edges."""
-    from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_df
 
     def build():
         return connected_components(
@@ -97,7 +97,7 @@ def _multiband_components(spark, sf_dir):
             hops_per_round=5,
         )
 
-    return df_stage_cached(
+    return cached_df(
         spark, f"multiband_components04:{sf_dir}", build, n_files=1
     )
 

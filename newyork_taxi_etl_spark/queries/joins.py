@@ -714,9 +714,9 @@ def join_strategy_choice(spark, sf_dir):
     # orders stats) before every execution — the chooser is a pure
     # deterministic function of the corpus, so it now prices once per
     # process and both queries read it back.
-    from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_df
 
-    return df_stage_cached(
+    return cached_df(
         spark,
         f"join_choice:{sf_dir}",
         lambda: _join_strategy_choice_build(spark, sf_dir),

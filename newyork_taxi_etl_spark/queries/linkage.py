@@ -105,13 +105,13 @@ def _scored_pairs_cached(spark, sf_dir):
     exact Jaccard — on the identical corpus.  The pair set is (bigint,
     bigint, double), bit-exact through parquet; every consumer windows/
     aggregates order-independently."""
-    from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_df
 
     def build():
         a, b = _corpora(spark, sf_dir)
         return blocked_linkage_pairs(a, b)
 
-    return df_stage_cached(
+    return cached_df(
         spark, f"linkage_scored_pairs:{sf_dir}", build, n_files=1
     )
 

@@ -927,20 +927,17 @@ def _ivf_centroids_cached(spark, emb, sf_dir: str, k: int = 8):
     bit-exactly, so hit and miss paths are value-identical.  Subset
     trainers (incremental append, streaming ingest) keep their own
     builds: their input is not the full corpus."""
-    import os
-
     from newyork_taxi_etl_spark.operators.clustering import (
         kmeans_centroids,
     )
-    from newyork_taxi_etl_spark.streaming.windows import _stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_df
 
-    def build(target: str) -> None:
-        kmeans_centroids(emb, k=k, n_iter=1).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(target, "centroids"))
-
-    sdir = _stage_cached(None, f"ivfcent{k}:{sf_dir}", build)
-    return spark.read.parquet(os.path.join(sdir, "centroids"))
+    return cached_df(
+        spark,
+        f"ivfcent{k}:{sf_dir}",
+        lambda: kmeans_centroids(emb, k=k, n_iter=1),
+        n_files=1,
+    )
 
 
 def _pq_trained_cached(
@@ -961,7 +958,7 @@ def _pq_trained_cached(
     returned tuple is _pq_parts_v-shaped."""
     import os
 
-    from newyork_taxi_etl_spark.streaming.windows import _stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_dir
 
     subvecs, _, _, d = _pq_parts_v(base, k_codes, train=False)
 
@@ -974,7 +971,7 @@ def _pq_trained_cached(
             "overwrite"
         ).parquet(os.path.join(target, "encoded"))
 
-    sdir = _stage_cached(None, cache_key, build)
+    sdir = cached_dir(cache_key, build)
     codebook = spark.read.parquet(os.path.join(sdir, "codebook"))
     encoded = spark.read.parquet(os.path.join(sdir, "encoded"))
     return subvecs, codebook, encoded, d
@@ -1445,7 +1442,7 @@ def _ivfpq_adc_topk(spark, sf_dir, k=5, n_probe=2):
         spread_small_scan,
     )
 
-    from newyork_taxi_etl_spark.streaming.windows import _stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_dir
 
     emb = spread_small_scan(
         spark.read.parquet(table_path(sf_dir, "embeddings"))
@@ -1501,7 +1498,7 @@ def _ivfpq_adc_topk(spark, sf_dir, k=5, n_probe=2):
             os.path.join(target, "centroids")
         )
 
-    idx_root = _stage_cached(None, f"ivfpqidx_raw:{sf_dir}", build)
+    idx_root = cached_dir(f"ivfpqidx_raw:{sf_dir}", build)
 
     # PROBE: nearest n_probe cells per query from persisted centroids,
     # pushed as a static partition filter on the code scan
@@ -1614,7 +1611,7 @@ def _ivfpq_residual_topk(spark, sf_dir, k=5, n_probe=2):
     from newyork_taxi_etl_spark.operators.similarity import (
         spread_small_scan,
     )
-    from newyork_taxi_etl_spark.streaming.windows import _stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_dir
 
     emb = spread_small_scan(
         spark.read.parquet(table_path(sf_dir, "embeddings"))
@@ -1675,7 +1672,7 @@ def _ivfpq_residual_topk(spark, sf_dir, k=5, n_probe=2):
             os.path.join(target, "centroids")
         )
 
-    idx_root = _stage_cached(None, f"ivfpqidx_res:{sf_dir}", build)
+    idx_root = cached_dir(f"ivfpqidx_res:{sf_dir}", build)
 
     # PROBE: n_probe cells per query; the query's distance table is
     # built PER PROBED CELL from its residual against that centroid
@@ -6248,7 +6245,7 @@ def ann_opq_trained_recall(spark, sf_dir):
     # the rotation fold on the hit path)
     import os as _os
 
-    from newyork_taxi_etl_spark.streaming.windows import _stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_dir
 
     def build_opq(target: str) -> None:
         import numpy as np
@@ -6274,7 +6271,7 @@ def ann_opq_trained_recall(spark, sf_dir):
             "overwrite"
         ).parquet(_os.path.join(target, "encoded"))
 
-    sdir = _stage_cached(None, f"pqt16_opq:{sf_dir}", build_opq)
+    sdir = cached_dir(f"pqt16_opq:{sf_dir}", build_opq)
     import numpy as np
 
     r = np.zeros((64, 64))

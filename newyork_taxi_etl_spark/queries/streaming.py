@@ -204,12 +204,10 @@ def stream_stream_join(spark, sf_dir):
     "value-checked by the oracle",
 )
 def streaming_upsert_counts(spark, sf_dir):
-    stage = _workdir("upsert_stage")
     target = _workdir("upsert_target")
     return W.run_foreachbatch_upsert(
         spark,
         read_events(spark, sf_dir),
-        stage,
         target,
         cache_key=f"events_rep4:{sf_dir}",
     )
@@ -236,13 +234,11 @@ def streaming_upsert_counts(spark, sf_dir):
     "every replayed row double-folds and the hash compare fails",
 )
 def foreachbatch_idempotent_replay(spark, sf_dir):
-    stage = _workdir("replay_stage")
     target = _workdir("replay_target")
     # same read-only stage (and key) as streaming_upsert_counts
     return W.run_upsert_replay_proof(
         spark,
         read_events(spark, sf_dir),
-        stage,
         target,
         cache_key=f"events_rep4:{sf_dir}",
     )
@@ -466,7 +462,6 @@ def streaming_lsh_index_dedup(spark, sf_dir):
     return W.run_streaming_lsh_index(
         spark,
         corpus,
-        base + "_stage",
         base + "_index",
         base + "_pairs",
         cache_key=f"lshidx_corpus:{sf_dir}",
@@ -510,7 +505,6 @@ def streaming_lsh_index_dedup(spark, sf_dir):
     "the oracle gates the watermark mechanics themselves",
 )
 def stream_stream_outer_join(spark, sf_dir):
-    stage = _workdir("ssouter_stage")
     # the three outer-join drains stage the IDENTICAL time-sliced events +
     # sentinel content, so they share one cached stage per sf_dir (the
     # checkpoint/sink stays per-run; values are unaffected — the stage is
@@ -518,7 +512,6 @@ def stream_stream_outer_join(spark, sf_dir):
     return W.run_stream_stream_outer_join(
         spark,
         read_events(spark, sf_dir),
-        stage,
         cache_key=f"events_ss3:{sf_dir}",
     )
 
@@ -564,11 +557,9 @@ _SS_TWO_SIDED_ORACLE = """
     "value-identical to this batch FULL JOIN twin",
 )
 def stream_stream_full_outer_join(spark, sf_dir):
-    stage = _workdir("ssfull_stage")
     return W.run_stream_stream_two_sided_outer(
         spark,
         read_events(spark, sf_dir),
-        stage,
         "fullOuter",
         cache_key=f"events_ss3:{sf_dir}",
     )
@@ -584,11 +575,9 @@ def stream_stream_full_outer_join(spark, sf_dir):
     "pinned by the oracle",
 )
 def stream_stream_right_outer_join(spark, sf_dir):
-    stage = _workdir("ssright_stage")
     return W.run_stream_stream_two_sided_outer(
         spark,
         read_events(spark, sf_dir),
-        stage,
         "rightOuter",
         cache_key=f"events_ss3:{sf_dir}",
     )
@@ -770,11 +759,9 @@ def streaming_quantile_sketch(spark, sf_dir):
     "sessionization-at-ingest.",
 )
 def streaming_session_close(spark, sf_dir):
-    stage = _workdir("sessclose_stage")
     return W.run_streaming_session_close(
         spark,
         read_events(spark, sf_dir),
-        stage,
         cache_key=f"events_sess3:{sf_dir}",
     )
 
@@ -822,11 +809,9 @@ def streaming_session_close(spark, sf_dir):
     "measured, not assumed.",
 )
 def streaming_late_drop(spark, sf_dir):
-    stage = _workdir("latedrop_stage")
     return W.run_streaming_late_drop(
         spark,
         read_events(spark, sf_dir),
-        stage,
         cache_key=f"events_latedrop3:{sf_dir}",
     )
 

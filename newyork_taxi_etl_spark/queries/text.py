@@ -720,7 +720,7 @@ def _tops_cached(spark, cache_key: str, builder):
     what the trainers return."""
     import os
 
-    from newyork_taxi_etl_spark.streaming.windows import _stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_dir
 
     def build(target: str) -> None:
         tops = builder()
@@ -735,7 +735,7 @@ def _tops_cached(spark, cache_key: str, builder):
         with open(os.path.join(target, "NROUNDS"), "w") as f:
             f.write(str(len(tops)))
 
-    sdir = _stage_cached(None, cache_key, build)
+    sdir = cached_dir(cache_key, build)
     with open(os.path.join(sdir, "NROUNDS")) as f:
         rounds = int(f.read())
     allt = spark.read.parquet(os.path.join(sdir, "tops"))
@@ -753,9 +753,9 @@ def _holdout_cached(spark, sf_dir, family: str, build):
     tokenizer_family_bakeoff's leg.  The table is tiny (splits x langs
     rows of strings/bigints/doubles — bit-exact through parquet) and
     every consumer re-sorts, so hit and miss paths are value-identical."""
-    from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_df
 
-    return df_stage_cached(
+    return cached_df(
         spark, f"holdout_scored_{family}:{sf_dir}", build, n_files=1
     ).orderBy("split", "lang")
 
@@ -806,21 +806,17 @@ def _uni_final_cached(spark, sf_dir, split: str):
     """train_unigram's final (piece, cnt) table through the same stage
     cache (em_rounds=2, keep_multi=24 — the only configuration any
     registered query trains)."""
-    import os
-
-    from newyork_taxi_etl_spark.streaming.windows import _stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_df
 
     docs = spark.read.parquet(table_path(sf_dir, "documents"))
-
-    def build(target: str) -> None:
-        UNI.train_unigram(
+    return cached_df(
+        spark,
+        f"unifinal_em2k24:{split}:{sf_dir}",
+        lambda: UNI.train_unigram(
             _split_docs(docs, split), em_rounds=2, keep_multi=24
-        ).coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(target, "final")
-        )
-
-    sdir = _stage_cached(None, f"unifinal_em2k24:{split}:{sf_dir}", build)
-    return spark.read.parquet(os.path.join(sdir, "final"))
+        ),
+        n_files=1,
+    )
 
 
 def _bpe_encoded_words(spark, sf_dir):
@@ -1434,7 +1430,7 @@ def _doc_nll_cached(spark, sf_dir, model: str, out: str):
     pure deterministic function of the corpus; (bigint, string, double)
     round-trip parquet bit-exactly and every consumer aggregates
     order-independently, so hit and miss paths are value-identical."""
-    from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_df
 
     def build():
         docs = spark.read.parquet(table_path(sf_dir, "documents"))
@@ -1454,7 +1450,7 @@ def _doc_nll_cached(spark, sf_dir, model: str, out: str):
             return _doc_mean_nll(_uni_add1_nll(_tok_stream(docs)), out="s")
         raise ValueError(model)
 
-    df = df_stage_cached(spark, f"docnll_{model}:{sf_dir}", build)
+    df = cached_df(spark, f"docnll_{model}:{sf_dir}", build)
     return df.select("doc_id", "lang", F.col("s").alias(out))
 
 
@@ -3818,13 +3814,13 @@ def _char_counts_cached(spark, sf_dir):
     per-character explode; the folded table is langs x alphabet rows of
     (string, string, bigint) — bit-exact through parquet, consumers
     window over it order-independently."""
-    from newyork_taxi_etl_spark.streaming.windows import df_stage_cached
+    from newyork_taxi_etl_spark.stagecache import cached_df
 
     def build():
         docs = spark.read.parquet(table_path(sf_dir, "documents"))
         return _char_counts(docs)
 
-    return df_stage_cached(
+    return cached_df(
         spark, f"char_counts:{sf_dir}", build, n_files=1
     )
 

@@ -32,6 +32,7 @@ QUICK_MODULES = {
     "test_plans",
     "test_zones",
     "test_bench_contract",
+    "test_stagecache",
 }
 
 

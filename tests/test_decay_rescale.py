@@ -9,6 +9,7 @@ docstring claims (reference finishes at corpus max; state is O(types)).
 from __future__ import annotations
 
 import tempfile
+import uuid
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -110,7 +111,8 @@ def test_streaming_lsh_index_equals_batch_pairs(spark):
         got = sorted(
             (r["id_a"], r["id_b"])
             for r in run_streaming_lsh_index(
-                spark, corpus, d + "/stage", d + "/index", d + "/pairs"
+                spark, corpus, d + "/index", d + "/pairs",
+                cache_key=uuid.uuid4().hex,
             ).collect()
         )
     assert got == want

@@ -4,6 +4,8 @@ ingest fold's per-slice replay + sidecar guard."""
 
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pytest
 from pyspark.sql import functions as F
@@ -148,7 +150,8 @@ def test_kll_fold_matches_replay_at_2_and_5_slices(spark, tmp_path):
             map(
                 tuple,
                 W.run_streaming_kll_ingest(
-                    spark, docs, str(tmp_path / f"w{s}"), n_slices=s
+                    spark, docs, str(tmp_path / f"w{s}"), n_slices=s,
+                    cache_key=uuid.uuid4().hex,
                 ).collect(),
             )
         )
@@ -187,7 +190,8 @@ def test_kll_fold_is_sidecar_guarded_and_restart_deterministic(
         map(
             tuple,
             W.run_streaming_kll_ingest(
-                spark, docs, str(tmp_path / "wa"), n_slices=3
+                spark, docs, str(tmp_path / "wa"), n_slices=3,
+                cache_key=uuid.uuid4().hex,
             ).collect(),
         )
     )
@@ -195,7 +199,8 @@ def test_kll_fold_is_sidecar_guarded_and_restart_deterministic(
         map(
             tuple,
             W.run_streaming_kll_ingest(
-                spark, docs, str(tmp_path / "wb"), n_slices=3
+                spark, docs, str(tmp_path / "wb"), n_slices=3,
+                cache_key=uuid.uuid4().hex,
             ).collect(),
         )
     )

@@ -5,6 +5,7 @@ Spark == DuckDB; these tests prove the pipeline actually LINKS)."""
 from __future__ import annotations
 
 import random
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -200,7 +201,8 @@ def test_streaming_linkage_is_batching_invariant(spark, tmp_path):
     results = []
     for n in (1, 5):
         out = W.run_streaming_linkage_ingest(
-            spark, docs, b, str(tmp_path / f"w{n}"), n_slices=n
+            spark, docs, b, str(tmp_path / f"w{n}"), n_slices=n,
+            cache_key=uuid.uuid4().hex,
         )
         results.append(
             sorted((r["b_id"], r["doc_id"], r["jaccard"]) for r in out.collect())

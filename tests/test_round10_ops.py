@@ -5,6 +5,8 @@ pin that the computed thing has the properties the docstrings claim
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import functions as F
 
 from newyork_taxi_etl_spark.registry import queries
@@ -90,10 +92,12 @@ def test_streaming_mmd_ingest_batching_invariant(spark, tmp_path):
 
     emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
     one = run_streaming_mmd_ingest(
-        spark, emb, str(tmp_path / "one"), n_slices=1
+        spark, emb, str(tmp_path / "one"), n_slices=1,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     four = run_streaming_mmd_ingest(
-        spark, emb, str(tmp_path / "four"), n_slices=4
+        spark, emb, str(tmp_path / "four"), n_slices=4,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     batch = queries()["mmd_moment_drift"](spark, SF_ORACLE).collect()
     assert sorted(map(tuple, one)) == sorted(map(tuple, four))

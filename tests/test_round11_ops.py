@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import uuid
 
 from pyspark.sql import functions as F
 
@@ -34,7 +35,8 @@ def test_streaming_w1_ingest_routes_null_ts_like_batch(spark, tmp_path):
         F.col("ts").cast("timestamp").alias("ts"), "value"
     )
     out = run_streaming_w1_ingest(
-        spark, ev, str(tmp_path / "w1null"), n_slices=2
+        spark, ev, str(tmp_path / "w1null"), n_slices=2,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     assert len(out) == 1
     assert out[0]["n_a"] == 2
@@ -166,10 +168,12 @@ def test_psi_ingest_batching_invariant_and_equals_batch(spark, tmp_path):
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
     one = run_streaming_psi_ingest(
-        spark, docs, str(tmp_path / "one"), n_slices=1
+        spark, docs, str(tmp_path / "one"), n_slices=1,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     four = run_streaming_psi_ingest(
-        spark, docs, str(tmp_path / "four"), n_slices=4
+        spark, docs, str(tmp_path / "four"), n_slices=4,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     batch = queries()["quality_psi_by_domain"](spark, SF_ORACLE).collect()
     assert sorted(map(tuple, one)) == sorted(map(tuple, four))
@@ -439,10 +443,12 @@ def test_decon_ingest_batching_invariant_and_equals_batch(spark, tmp_path):
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
     one = run_streaming_decon_ingest(
-        spark, docs, str(tmp_path / "one"), n_slices=1
+        spark, docs, str(tmp_path / "one"), n_slices=1,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     four = run_streaming_decon_ingest(
-        spark, docs, str(tmp_path / "four"), n_slices=4
+        spark, docs, str(tmp_path / "four"), n_slices=4,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     batch = queries()["decontamination_exact_substring"](
         spark, SF_ORACLE

@@ -5,6 +5,7 @@ operators."""
 from __future__ import annotations
 
 import math
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -160,10 +161,12 @@ def test_dsir_ingest_batching_invariant_and_equals_batch(spark, tmp_path):
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
     one = run_streaming_dsir_ingest(
-        spark, docs, str(tmp_path / "one"), n_slices=1
+        spark, docs, str(tmp_path / "one"), n_slices=1,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     four = run_streaming_dsir_ingest(
-        spark, docs, str(tmp_path / "four"), n_slices=4
+        spark, docs, str(tmp_path / "four"), n_slices=4,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     batch = queries()["dsir_importance_select"](spark, SF_ORACLE).collect()
     assert sorted(map(tuple, one)) == sorted(map(tuple, four))
@@ -354,90 +357,6 @@ def test_dsir_affinity_diagonal_is_single_target_query(spark):
     for d in ("src0", "src1", "src2"):
         assert mat[("src1", d)]["avg_logweight"] == prof[d]["avg_logweight"]
         assert mat[("src1", d)]["selected_share"] == prof[d]["selected_share"]
-
-
-def test_stage_cache_build_once_and_atomic(spark, tmp_path):
-    """_stage_cached: a keyed stage builds exactly once (second call is a
-    no-Spark-job hit on the same completed generation), an uncached call
-    still builds into the caller's dir, and a half-built generation is
-    invisible (no _STAGE_COMPLETE => rebuild)."""
-    import os
-
-    from newyork_taxi_etl_spark.streaming.windows import (
-        _stage_cache_dir,
-        _stage_cached,
-    )
-
-    calls = []
-
-    def build(target):
-        calls.append(target)
-        os.makedirs(target, exist_ok=True)
-        with open(os.path.join(target, "part-0.parquet"), "w") as f:
-            f.write("x")
-
-    # unique per test RUN: the cache root is shared across every test in
-    # this PROCESS (r15: scoped per-process, removed at exit), so a
-    # stable key could hit a generation built by an earlier test
-    import uuid
-
-    key = f"pytest-stage-{uuid.uuid4().hex}"
-    d1 = _stage_cached(str(tmp_path / "a"), key, build)
-    d2 = _stage_cached(str(tmp_path / "b"), key, build)
-    assert d1 == d2 == _stage_cache_dir(key)
-    assert len(calls) == 1
-    assert os.path.exists(os.path.join(d1, "_STAGE_COMPLETE"))
-    # uncached: builds into the caller's dir every time
-    d3 = _stage_cached(str(tmp_path / "c"), None, build)
-    assert d3 == str(tmp_path / "c") and len(calls) == 2
-    # a generation without the marker is rebuilt, not trusted
-    os.remove(os.path.join(d1, "_STAGE_COMPLETE"))
-    import shutil
-
-    shutil.rmtree(d1)
-    d4 = _stage_cached(str(tmp_path / "d"), key, build)
-    assert d4 == d1 and len(calls) == 3
-
-
-def test_stage_cache_invalidates_on_corpus_change(tmp_path):
-    """r14 ADVICE (medium): a stage keyed on a source dir must NOT serve
-    a stale trained artifact after the parquet under that dir is
-    regenerated — the corpus fingerprint (file inventory + sizes +
-    mtimes) is folded into the key, so a regeneration lands in a fresh
-    cache generation and rebuilds; an untouched corpus still hits."""
-    import os
-    import uuid
-
-    from newyork_taxi_etl_spark.streaming.windows import (
-        _fingerprinted_key,
-        _stage_cached,
-    )
-
-    src = tmp_path / "sfX"
-    src.mkdir()
-    (src / "documents.parquet").write_text("gen1" * 10)
-
-    calls = []
-
-    def build(target):
-        calls.append(target)
-        os.makedirs(target, exist_ok=True)
-        (tmp_path / "marker").write_text("x")
-        with open(os.path.join(target, "out"), "w") as f:
-            f.write("x")
-
-    key = f"pytest-fp-{uuid.uuid4().hex}:{src}"
-    d1 = _stage_cached(str(tmp_path / "a"), key, build)
-    d2 = _stage_cached(str(tmp_path / "b"), key, build)
-    assert d1 == d2 and len(calls) == 1  # untouched corpus: cache hit
-    # regenerate the corpus (different size => different fingerprint
-    # even under coarse mtime resolution)
-    (src / "documents.parquet").write_text("generation-two" * 10)
-    d3 = _stage_cached(str(tmp_path / "c"), key, build)
-    assert len(calls) == 2, "stale stage served after corpus regeneration"
-    assert d3 != d1
-    # keys with no path segment are unchanged by the fold
-    assert _fingerprinted_key("plain-key:stage3") == "plain-key:stage3"
 
 
 def test_hd_rotation_is_orthogonal_and_l2_preserving(spark):

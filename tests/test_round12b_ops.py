@@ -5,6 +5,8 @@ batching invariance)."""
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from newyork_taxi_etl_spark.queries.text import (
@@ -94,7 +96,8 @@ def test_streaming_char_coverage_matches_batch_any_slicing(spark, tmp_path):
         got = [
             tuple(r)
             for r in W.run_streaming_char_coverage_ingest(
-                spark, docs, str(tmp_path / f"s{n_slices}"), n_slices=n_slices
+                spark, docs, str(tmp_path / f"s{n_slices}"), n_slices=n_slices,
+                cache_key=uuid.uuid4().hex,
             ).collect()
         ]
         assert got == batch, f"slicing {n_slices} diverged"

@@ -3,6 +3,8 @@ and the byte-BPE registration support."""
 
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pandas as pd
 import pytest
@@ -363,7 +365,8 @@ def test_streaming_lcp_depth_drains_to_batch_under_any_slicing(
     batch = queries()["lcp_repetition_depth"](spark, SF_SMOKE).collect()
     for slices in (2, 5):
         out = W.run_streaming_lcp_depth_ingest(
-            spark, docs, str(tmp_path / f"w{slices}"), n_slices=slices
+            spark, docs, str(tmp_path / f"w{slices}"), n_slices=slices,
+            cache_key=uuid.uuid4().hex,
         ).collect()
         assert out == batch, f"n_slices={slices}"
 
@@ -462,6 +465,7 @@ def test_streaming_doremi_drains_to_batch_under_any_slicing(
     batch = queries()["doremi_domain_weights"](spark, SF_SMOKE).collect()
     for slices in (2, 5):
         out = W.run_streaming_doremi_ingest(
-            spark, docs, str(tmp_path / f"w{slices}"), n_slices=slices
+            spark, docs, str(tmp_path / f"w{slices}"), n_slices=slices,
+            cache_key=uuid.uuid4().hex,
         ).collect()
         assert out == batch, f"n_slices={slices}"

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pandas as pd
 import pytest
@@ -341,7 +343,8 @@ def test_streaming_bloom_gate_batch_equality_any_slicing(spark, tmp_path):
     ).collect()[0].asDict()
     for n in (2, 5):
         drained = W.run_streaming_bloom_ingest(
-            spark, docs, str(tmp_path / f"w{n}"), n_slices=n
+            spark, docs, str(tmp_path / f"w{n}"), n_slices=n,
+            cache_key=uuid.uuid4().hex,
         ).collect()[0].asDict()
         assert drained == batch, (n, drained, batch)
     assert batch["n_true_dup"] == 2

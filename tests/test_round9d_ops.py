@@ -6,6 +6,8 @@ statistics, batching invariance of the ingest fold)."""
 
 from __future__ import annotations
 
+import uuid
+
 import numpy as np
 
 from newyork_taxi_etl_spark.registry import queries
@@ -173,10 +175,12 @@ def test_streaming_quality_ingest_batching_invariant(spark, tmp_path):
 
     docs = spark.read.parquet(f"{SF_ORACLE}/documents.parquet")
     one = run_streaming_quality_ingest(
-        spark, docs, str(tmp_path / "one"), n_slices=1
+        spark, docs, str(tmp_path / "one"), n_slices=1,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     four = run_streaming_quality_ingest(
-        spark, docs, str(tmp_path / "four"), n_slices=4
+        spark, docs, str(tmp_path / "four"), n_slices=4,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     assert sorted(map(tuple, one)) == sorted(map(tuple, four))
     assert one, "ingest produced no per-lang decisions"
@@ -376,10 +380,12 @@ def test_streaming_w1_ingest_batching_invariant(spark, tmp_path):
 
     ev = read_events(spark, SF_ORACLE)
     one = run_streaming_w1_ingest(
-        spark, ev, str(tmp_path / "one"), n_slices=1
+        spark, ev, str(tmp_path / "one"), n_slices=1,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     four = run_streaming_w1_ingest(
-        spark, ev, str(tmp_path / "four"), n_slices=4
+        spark, ev, str(tmp_path / "four"), n_slices=4,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     batch = queries()["wasserstein_value_drift"](spark, SF_ORACLE).collect()
     assert sorted(map(tuple, one)) == sorted(map(tuple, four))

@@ -3,6 +3,8 @@ must grow with the corpus so bucket size — the quadratic term — stays fixed.
 
 from __future__ import annotations
 
+import uuid
+
 from newyork_taxi_etl_spark.operators.similarity import (
     lsh_auto_dims,
     lsh_bucket_expr,
@@ -249,10 +251,12 @@ def test_streaming_ann_ingest_batching_invariant(spark, tmp_path):
 
     emb = spark.read.parquet(SF_SMOKE + "/embeddings.parquet")
     one = run_streaming_ann_ingest(
-        spark, emb, str(tmp_path / "one"), n_slices=1
+        spark, emb, str(tmp_path / "one"), n_slices=1,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     three = run_streaming_ann_ingest(
-        spark, emb, str(tmp_path / "three"), n_slices=3
+        spark, emb, str(tmp_path / "three"), n_slices=3,
+        cache_key=uuid.uuid4().hex,
     ).collect()
     assert one == three
     assert len(one) > 0
